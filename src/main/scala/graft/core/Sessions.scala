@@ -20,10 +20,11 @@ object Sessions {
     sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption).filter(_ > 0)
       .getOrElse(Runtime.getRuntime.availableProcessors)
 
-  def local(appName: String = "graft"): SparkSession =
-    SparkSession
+  /** The engine's session, with graft installed. Installed after
+    * `getOrCreate`, which may hand back a session built without it. */
+  def local(appName: String = "graft"): SparkSession = {
+    val spark = SparkSession
       .builder()
-      .withExtensions(graft.functions.GraftFunctions.register)
       .master(s"local[$cpus]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cpus.toString)
@@ -36,4 +37,7 @@ object Sessions {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    graft.functions.GraftFunctions.install(spark)
+    spark
+  }
 }

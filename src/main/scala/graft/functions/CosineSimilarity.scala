@@ -1,12 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, TypeCheckResult}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
-import org.apache.spark.sql.SparkSessionExtensions
 
 /** Native codegen'd cosine similarity over two double arrays.
   *
@@ -106,6 +105,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** `cosine_sim`'s registration spec. [[GraftFunctions.install]]
+  * registers it in each session that enters graft; nothing else
+  * registers it. */
 object CosineSimilarity {
   val ident: FunctionIdentifier = FunctionIdentifier("cosine_sim")
 
@@ -116,25 +118,5 @@ object CosineSimilarity {
     require(exprs.length == 2,
       s"cosine_sim expects 2 arguments, got ${exprs.length}")
     CosineSimilarity(exprs.head, exprs(1))
-  }
-
-  /** SparkSessionExtensions hook:
-    * `.withExtensions(CosineSimilarity.register)` on the builder. */
-  def register(ext: SparkSessionExtensions): Unit =
-    ext.injectFunction((ident, info, builder))
-
-  /** Imperative registration for an existing session (tests,
-    * Verify/Bench mains). */
-  def registerTo(registry: FunctionRegistry): Unit =
-    registry.registerFunction(ident, info, builder)
-
-  /** Idempotent registration into any session — lets queries run in
-    * sessions built without `.withExtensions` (e.g. an external
-    * harness's own SparkSession). */
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val registry =
-      org.apache.spark.sql.GraftSqlShims.functionRegistry(spark)
-    if (registry.lookupFunctionBuilder(ident).isEmpty)
-      registerTo(registry)
   }
 }

@@ -163,7 +163,6 @@ object ExtendedQueries {
     * hash-verifies in DuckDB. Emits the sample size per group so the
     * estimate's precision is auditable. */
   def x8cSampledQuantiles(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     Tables.orders(s, dir)
       .filter(graft.core.PortableHash.md5Hash60(col("o_orderkey"))
         % SampleMod === 0L)
@@ -366,7 +365,6 @@ object ExtendedQueries {
     * 100 TB training-data split actually requires, and what lets the
     * oracle verify it exactly. */
   def l3Stratified(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     Tables.orders(s, dir)
       .withColumn("h",
         graft.core.PortableHash.md5Hash60(col("o_orderkey")) % 1000000L)
@@ -405,7 +403,6 @@ object ExtendedQueries {
     * broadcast join of the tiny rate table, one scan-filter — a
     * single pass over the corpus, no driver-side loop. */
   def l12MixtureSample(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val docs = Tables.documents(s, dir)
     val rates = docs.groupBy(col("lang"))
       .agg(count(lit(1)).as("n_l"))

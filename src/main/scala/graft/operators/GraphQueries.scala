@@ -460,7 +460,6 @@ object GraphQueries {
     * at sf0.1 (11.5 s). */
   private[graft] def closureFromAdjacency(s: SparkSession,
       adj: DataFrame): DataFrame = {
-    graft.functions.IntersectCount.ensureRegistered(s)
     // The oriented edge stream is exploded SLIM — (src, dst) longs
     // only — and each endpoint's array joins in from the node-sized
     // adjacency table. Carrying nbrs_src through the explode instead

@@ -25,7 +25,6 @@ object MergeOps {
   type Q = (SparkSession, String) => DataFrame
 
   def m10MergeUpsert(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     def cents = round(col("o_totalprice") * 100).cast("long")
     val withH = Tables.orders(s, dir)
       .withColumn("h", PortableHash.md5Hash60(col("o_orderkey")) % 10L)

@@ -100,7 +100,6 @@ object PipelineQueries {
         .select(col("doc_id")).localCheckpoint())
 
   def pipeCorpusBuild(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val base = gateProjection(
         Tables.fanOut(Tables.documents(s, dir), "doc_id"))
       .transform(graft.core.CkptSlots.checkpoint(
@@ -373,8 +372,6 @@ object PipelineQueries {
       priorDigests: Option[DataFrame],
       ctx: Option[ProbeCtx],
       batchSide: Option[BatchSignatures] = None): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
-    graft.functions.JaccardSim.ensureRegistered(s)
     val M = graft.sources.IndexStore.TrgmDeltaMod
     val cat = graft.sources.IndexStore.ensureCatalog(s, dir)
     val mh = graft.sources.IndexStore.ensureMinhash(s, dir)

@@ -1350,7 +1350,6 @@ object RelationalQueries {
     * approximate sketch. Error bound additionally asserted in
     * KmvSketchSpec. */
   def d3KmvDistinct(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     Tables.lineitem(s, dir).agg(
       graft.functions.KmvSketch
         .approxDistinct(graft.core.PortableHash.md5Hash60(col("l_partkey")),

@@ -172,7 +172,6 @@ object RetrievalQueries {
     * models, then broadcasts; the per-doc aggregate shuffles on
     * doc_id only. Corpus totals are 2 bounded driver scalars. */
   def tDsirWeight(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val isTarget = col("source").isin(DsirTargetSources: _*)
     val words = Tables.documents(s, dir)
       .select(col("doc_id"), isTarget.as("tgt"),
@@ -212,7 +211,6 @@ object RetrievalQueries {
     * instead of per query. */
   def tDsirIndexed(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.IndexStore
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val p = IndexStore.ensureWordPostings(s, dir)
     val posts = s.read.parquet(p.postings)
       .select(col("doc_id"), col("tf"),
@@ -347,7 +345,6 @@ object RetrievalQueries {
     * chunk's md5 digest, so chunk BODIES never shuffle; the per-doc
     * rollup reuses the doc_id key. */
   def tCdcChunks(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     // fanOut on doc_id: parallelizes the word explode AND pre-
     // establishes the hash partitioning the per-doc lag/cumsum window
     // needs, so the word-level rows never cross an exchange

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Descending, Expression, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
@@ -155,18 +155,11 @@ object TopKPerGroup {
     * 100 MB. */
   val DefaultMaxPartialGroups: Int = 500000
 
-  /** Idempotent strategy registration (experimental.extraStrategies
-    * is the public per-session hook; `SparkSessionExtensions
-    * .injectPlannerStrategy` is the builder-time equivalent). */
-  def ensureStrategy(spark: SparkSession): Unit = {
-    val exp = spark.experimental
-    if (!exp.extraStrategies.contains(TopKPerGroupStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ TopKPerGroupStrategy
-  }
-
   /** Top-k rows per group under (orderCol asc/desc, tieBreakers
     * asc) — tie-breakers must make the order total for the result
-    * to be well-defined. */
+    * to be well-defined. The session plans the node only once
+    * `graft.functions.GraftFunctions.install` has added
+    * [[TopKPerGroupStrategy]] to it. */
   def apply(df: DataFrame, groupCols: Seq[String], orderCol: String,
       descending: Boolean, tieBreakers: Seq[String], k: Int,
       maxPartialGroups: Int = DefaultMaxPartialGroups): DataFrame = {
@@ -174,7 +167,6 @@ object TopKPerGroup {
     require(maxPartialGroups > 0,
       s"maxPartialGroups must be positive, got $maxPartialGroups")
     val spark = df.sparkSession
-    ensureStrategy(spark)
     val lp = df.queryExecution.analyzed
     def attr(n: String): Attribute =
       lp.output.find(_.name == n).getOrElse(

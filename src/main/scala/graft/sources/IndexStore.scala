@@ -410,7 +410,6 @@ object IndexStore {
     * to read the batch docs' own signatures back from the standing
     * index, which silently admitted genuinely new doc_ids). */
   def minhashShingles(s: SparkSession, d: DataFrame): DataFrame = {
-    graft.functions.MinhashSig.ensureRegistered(s)
     d.withColumn("words", split(col("text"), " "))
       .select(col("doc_id"),
         transform(
@@ -514,7 +513,6 @@ object IndexStore {
     * twin certifies the content end-to-end). Once per (JVM, dir). */
   def ensureSimhash(s: SparkSession, dir: String): SimhashPaths =
     built(shBuilt, dir) {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val paths = SimhashPaths(
         indexRoot(dir).resolve("simhash_sigs").toString)
       // fanOut (r21): every build below runs heavy per-doc compute
@@ -588,7 +586,6 @@ object IndexStore {
     * per (JVM, dir). */
   def ensureWinnow(s: SparkSession, dir: String): WinnowPaths =
     built(winnowBuilt, dir) {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val paths = WinnowPaths(indexRoot(dir).resolve("winnow_fps").toString)
       // fanOut (r21): every build below runs heavy per-doc compute
       // (shingling, gram hashing, chunking) that would otherwise
@@ -626,7 +623,6 @@ object IndexStore {
     * (JVM, dir). */
   def ensureCdcChunks(s: SparkSession, dir: String): CdcPaths =
     built(cdcBuilt, dir) {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val root = indexRoot(dir)
       val paths = CdcPaths(
         root.resolve("cdc_chunks").toString,

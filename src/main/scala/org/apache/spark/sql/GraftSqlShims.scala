@@ -6,9 +6,10 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 /** Package-placed shim exposing two `private[sql]` entry points so
   * graft can behave like a first-party extension library:
   *
-  *  - the session's FunctionRegistry, to register graft's Catalyst
-  *    functions into sessions it did not build (e.g. a
-  *    harness-created SparkSession without `.withExtensions`);
+  *  - the session's FunctionRegistry, into which
+  *    `graft.functions.GraftFunctions.install` registers graft's
+  *    Catalyst functions — in any session, including one graft did
+  *    not build;
   *  - `Dataset.ofRows`, to wrap a graft logical node (e.g.
   *    graft.plans.TopKPerGroupNode) back into a DataFrame — the only
   *    way to hand a custom LogicalPlan to the planner.

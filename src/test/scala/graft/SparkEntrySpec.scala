@@ -18,6 +18,12 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(o * 10 >= n * 8, s"oracle share dropped below 80%: $o/$n")
   }
 
+  test("no query name is registered by two families") {
+    val names = SparkEntry.families.flatMap(_.keys)
+    val dup = names.diff(names.distinct)
+    assert(names.size == SparkEntry.queries.size, s"duplicate names: $dup")
+  }
+
   test("oracle SQL is single-statement with no control characters") {
     for ((k, sql) <- SparkEntry.oracleSql) {
       assert(!sql.trim.endsWith(";"), s"$k: trailing semicolon")

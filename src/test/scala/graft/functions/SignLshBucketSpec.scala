@@ -24,7 +24,6 @@ class SignLshBucketSpec extends SparkSpec {
   }
 
   test("bit-equal to the composed HOF spelling on the real embeddings") {
-    GraftFunctions.ensureRegistered(spark)
     for (planes <- Seq(8, 12)) {
       val rows = graft.core.Tables.embeddings(spark, sfDir)
         .select(col("vec_id"),
@@ -43,7 +42,6 @@ class SignLshBucketSpec extends SparkSpec {
   }
 
   test("edge cases: empty vector, zeros, null, planes bounds") {
-    GraftFunctions.ensureRegistered(spark)
     val r = spark.sql(
       """SELECT
         | signlsh_bucket(CAST(array() AS ARRAY<DOUBLE>), 8) AS empty,
@@ -61,7 +59,6 @@ class SignLshBucketSpec extends SparkSpec {
   }
 
   test("null ELEMENTS are defined as 0.0 contributions (ADVICE r7)") {
-    GraftFunctions.ensureRegistered(spark)
     // interpreted eval AND codegen must agree: a null slot is skipped,
     // identical to a 0.0 value at that position.
     val r = spark.sql(
@@ -77,7 +74,6 @@ class SignLshBucketSpec extends SparkSpec {
   }
 
   test("runs inside a WholeStageCodegen span") {
-    GraftFunctions.ensureRegistered(spark)
     val plan = graft.core.Tables.embeddings(spark, sfDir)
       .select(col("embedding").cast("array<double>").as("e"))
       .selectExpr("signlsh_bucket(e, 8) AS b")

@@ -13,7 +13,6 @@ class WinnowFpsSpec extends SparkSpec {
     // order): the winnow oracle family (t_winnow_fp,
     // dd_winnow_pairs, dd_dup_spans) rests on the native expression
     // reproducing the HOF selection digest-for-digest.
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     val w = TextQueries.WinnowWindow
     val diff = Tables.documents(spark, sfDir)
       .withColumn("words", split(col("text"), " "))
@@ -27,7 +26,6 @@ class WinnowFpsSpec extends SparkSpec {
 
   test("short-document edge parity with the HOF spelling") {
     import spark.implicits._
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     val w = TextQueries.WinnowWindow
     // 1-word, 2-word, exactly-3-word, empty-string, and sub-window
     // gram counts — every slice-clamp branch.
@@ -48,7 +46,6 @@ class WinnowFpsSpec extends SparkSpec {
   }
 
   test("native gram_hashes is bit-identical to the composed HOF transform") {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     val diff = Tables.documents(spark, sfDir)
       .withColumn("words", split(col("text"), " "))
       .select(
@@ -62,7 +59,6 @@ class WinnowFpsSpec extends SparkSpec {
   }
 
   test("winnow_fps stays inside a WholeStageCodegen span") {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     val plan = Tables.documents(spark, sfDir)
       .select(expr(
         s"winnow_fps(split(text, ' '), ${TextQueries.WinnowWindow})"))

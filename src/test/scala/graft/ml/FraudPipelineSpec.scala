@@ -63,6 +63,23 @@ class FraudPipelineSpec extends SparkSpec {
       ((cnt(1.0, 1), cnt(1.0, 0), cnt(0.0, 0), cnt(0.0, 1))))
   }
 
+  test("transform keeps every row, even an unseen type or a null numeric") {
+    // ScoringStream counts a batch's records on model.transform(batch),
+    // so the fitted pipeline must neither drop nor fail on a row;
+    // handleInvalid=keep on the StringIndexer and the VectorAssembler
+    // is what holds this.
+    val (train, test) = FraudPipeline.split(txns)
+    val model = FraudPipeline.train(train)
+    val seen = test.limit(8)
+    val batch = seen
+      .union(seen.limit(1).withColumn("type", lit("NOT_A_TYPE")))
+      .union(seen.limit(1).withColumn("amount", lit(null).cast("double")))
+    val r = model.transform(batch)
+      .agg(count(lit(1)), count(col("prediction"))).head()
+    assert(batch.count() == 10)
+    assert(r.getLong(0) == 10 && r.getLong(1) == 10, r)
+  }
+
   test("save/load round-trips the model (S12) with sidecar files") {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_model").toString

@@ -174,7 +174,6 @@ class SimilarityQueriesSpec extends SparkSpec {
     // brute-force cosine locally over ONLY the vectors assigned to
     // the probed cells; the operator's output must match it row for
     // row (ids, order, and cosines).
-    graft.functions.CosineSimilarity.ensureRegistered(spark)
     val (assigned, probes, q) =
       SimilarityQueries.ivfTopology(spark, sfDir)
     val probeSet = probes.toSet
@@ -206,7 +205,6 @@ class SimilarityQueriesSpec extends SparkSpec {
     // query's k results must equal a local brute-force recompute
     // over ONLY the cells that query probed (per-query probe sets
     // re-derived here from the persisted centroid root)
-    graft.functions.CosineSimilarity.ensureRegistered(spark)
     val paths = graft.sources.IndexStore.ensureIvf(spark, sfDir)
     val assigned = spark.read.parquet(paths.assignments)
       .selectExpr("vec_id", "cell", "e").collect()
@@ -368,7 +366,6 @@ class SimilarityQueriesSpec extends SparkSpec {
     // census with and without it
     val gated = SimilarityQueries.ddEmbedCensus(spark, sfDir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    graft.functions.SignLshBucket.ensureRegistered(spark)
     val raw = graft.core.Tables.embeddings(spark, sfDir)
       .selectExpr("signlsh_bucket(cast(embedding as array<double>), " +
         s"${SimilarityQueries.NearDupPlanes}) AS bucket")
