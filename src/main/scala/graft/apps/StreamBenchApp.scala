@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.core.Sessions
+import graft.core.{Artifacts, Sessions}
 import graft.ml.{FraudPipeline, Transactions}
 import graft.streaming.ScoringStream
 
@@ -543,8 +543,7 @@ object StreamBenchApp {
             // materialize (decisions collected, digests folded) —
             // free the previous generation instead of leaking one
             // checkpoint per batch
-            val flagged = graft.core.CkptSlots.checkpoint(
-              spark.sparkContext.applicationId + ":ingest_flagged")(
+            val flagged = Artifacts.slot(spark, sfDir, "ingest_flagged")(
               PipelineQueries.flagBatch(spark, sfDir,
                 batchDf, seenDigests))
             val survivors = flagged
@@ -565,8 +564,7 @@ object StreamBenchApp {
             // the alert topic for drops) would receive
             decisions ++= dec.collect().map(r =>
               (r.getLong(0), r.getString(1), r.getString(2)))
-            seenDigests = graft.core.CkptSlots.checkpoint(
-              spark.sparkContext.applicationId + ":ingest_seen")(
+            seenDigests = Artifacts.slot(spark, sfDir, "ingest_seen")(
               seenDigests
                 .unionByName(flagged.select(col("text_md5")))
                 .distinct())
@@ -584,8 +582,7 @@ object StreamBenchApp {
     // flags + window-rank quota per (source, batch)
     import org.apache.spark.sql.expressions.Window
     val bidDf = bidRows.toDF("doc_id", "bid")
-    val flaggedAll = graft.core.CkptSlots.checkpoint(
-      spark.sparkContext.applicationId + ":ingest_twin")(
+    val flaggedAll = Artifacts.slot(spark, sfDir, "ingest_twin")(
       PipelineQueries.deltaFlagged(spark, sfDir)
         .join(bidDf, Seq("doc_id"))) // fed docs only
     val w = Window.partitionBy(col("source"), col("bid"))

@@ -1,7 +1,5 @@
 package graft.operators
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.SparkSession
 
 /** Deterministic CLUSTERED embedding corpus for ANN index-quality
@@ -48,22 +46,19 @@ object AnnBenchCorpus {
   val Noise = 0.042
   val Seed = 4213L
 
-  private val built = TrieMap.empty[String, String]
-
   /** Generate (driver-side: ~5k × 64 doubles) and persist the
     * corpus; returns the dataset dir. `perCluster` scales the corpus
     * for spec-speed runs. */
-  def ensure(s: SparkSession, perCluster: Int = PerCluster): String =
-    built.getOrElseUpdate(s"pc$perCluster", {
-      // process-unique path (ADVICE r13, same rationale as
-      // IndexStore.indexRoot): a concurrent JVM regenerating the
-      // corpus must never overwrite files this one is mid-read on —
-      // content is deterministic, but a parquet overwrite is not
-      // atomic
-      val dir = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft_ann_structured_${graft.sources.IndexStore.processToken}",
-        s"pc$perCluster").toString
+  def ensure(s: SparkSession, perCluster: Int = PerCluster): String = {
+    // process-unique path (ADVICE r13, same rationale as
+    // IndexStore.indexRoot): a concurrent JVM regenerating the corpus
+    // must never overwrite files this one is mid-read on — content is
+    // deterministic, but a parquet overwrite is not atomic
+    val dir = java.nio.file.Paths.get(
+      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
+      s"graft_ann_structured_${graft.sources.IndexStore.processToken}",
+      s"pc$perCluster").toString
+    graft.core.Artifacts.built(dir, "ann_corpus") {
       val rnd = new java.util.Random(Seed)
       def gaussianVec(): Array[Double] =
         Array.fill(Dim)(rnd.nextGaussian())
@@ -87,5 +82,6 @@ object AnnBenchCorpus {
         .repartition(8)
         .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
       dir
-    })
+    }
+  }
 }

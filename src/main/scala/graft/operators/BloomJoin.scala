@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.BinaryType
 
-import graft.core.Tables
+import graft.core.{Artifacts, Tables}
 
 /** Bloom-filter semi-join reduction — the shuffle-volume cutter for
   * selective fact⋈dim joins at 100 TB. Spark's own
@@ -48,12 +48,6 @@ object BloomJoin {
       Literal.create(bloom, BinaryType),
       GraftSqlShims.expression(xxhash64(key))))
 
-  /** One bloom build per (context, input): the filter is a pure
-    * function of the dim data — same memoization contract as the
-    * layout writes and the KMeans/salt caches. */
-  private val bloomCache =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Byte]]
-
   /** Urgent-orders revenue through the bloom-reduced semi-join:
     * lineitem rows are pre-filtered by a bloom over the urgent
     * orders' keys before the exact semi-join and aggregate. Oracle
@@ -63,12 +57,13 @@ object BloomJoin {
     val dim = Tables.orders(s, dir)
       .filter(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey"))
-    val bloom = bloomCache.getOrElseUpdate(
-      s.sparkContext.applicationId + ":" + dir, {
-        // expectedItems from the dim count: one cheap job over the
-        // filtered dim side (at 100 TB you'd take it from stats)
-        buildBloom(dim, "o_orderkey", math.max(dim.count(), 1L))
-      })
+    // one bloom build per (context, input): the filter is a pure
+    // function of the dim data ([[graft.core.Artifacts.memo]])
+    val bloom = Artifacts.memo(s, dir, "j7_bloom") {
+      // expectedItems from the dim count: one cheap job over the
+      // filtered dim side (at 100 TB you'd take it from stats)
+      buildBloom(dim, "o_orderkey", math.max(dim.count(), 1L))
+    }
     val big = Tables.lineitem(s, dir)
       .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))
     big

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Artifacts
+
 /** Empirical scale rehearsal for the dedup/LSH stack (VERDICT r7
   * task #5) and, since r11, the ANN + winnow paths (VERDICT r10
   * task #5): the plan SHAPES say bounded — band-keyed equi-joins,
@@ -184,6 +186,9 @@ object ScaleRehearsal {
     runNoop(SimilarityQueries.ddMinhashLsh(spark, s"$base/warm"))
     runNoop(SimilarityQueries.simLshAnn(spark, s"$base/warm"))
     runNoop(TextQueries.ddWinnowPairs(spark, s"$base/warm"))
+    // one JVM walks every corpus size: free each corpus's memos and
+    // slots once it is measured, so earlier sizes stop pinning storage
+    Artifacts.release(spark, s"$base/warm")
 
     val results = sizes.map { n =>
       val dir = s"$base/n$n"
@@ -192,9 +197,10 @@ object ScaleRehearsal {
       // --- bucket census: candidates + hot-bucket drops (search
       // layout: 4 bands × 8 rows, cap 50, drop hot)
       val docs = SimilarityQueries.hashedShingleDocs(spark, dir)
-      val cand = SimilarityQueries.lshCandidatePairs(spark, docs,
+      val cand = SimilarityQueries.lshCandidatePairs(docs,
         nHashes = 32, bands = 4, maxBucket = 50,
-        starHotBuckets = false)
+        starHotBuckets = false,
+        ckpt = Artifacts.slot(spark, dir, "rehearsal_mh_banded"))
       val (nCand, _, _) = time(cand.count())
       // recompute the band/bucket census the pair generator prunes
       // on, to report what the cap DROPPED (pairs an uncapped join
@@ -268,8 +274,8 @@ object ScaleRehearsal {
       val (nEdCand, tEdCand, gEdCand) = time(
         SimilarityQueries.edJoinCandidates(
           SimilarityQueries.edJoinRepKeys(spark, dir),
-          slotTag = spark.sparkContext.applicationId +
-            ":rehearsal_edjoin_prefix:" + dir).count())
+          prefixCkpt = Artifacts.slot(spark, dir,
+            "rehearsal_edjoin_prefix")).count())
       val (nEdPairs, tEdJoin, gEdJoin) = {
         val (df, t, g) = time {
           val d = SimilarityQueries.ddEdJoin(spark, dir)
@@ -398,6 +404,8 @@ object ScaleRehearsal {
         s""""winnow_serve":$wnGs,"decon_bs":$dcGb,"decon_serve":$dcGs,""" +
         s""""g6_bs":$g6Gb,"g6_serve":$g6Gs,"x27_bs":$x27Gb,""" +
         s""""x27_serve":$x27Gs}}""")
+      Artifacts.release(spark, dir)
+      Artifacts.release(spark, pipeDir)
       // edjoin_cand / edjoin_pairs absolute counts are OUTPUT-bound
       // (the planted pile's true pairs are quadratic in pile size by
       // construction) — the gated quantities are the filter's

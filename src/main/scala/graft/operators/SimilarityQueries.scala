@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Artifacts, Tables}
 
 /** Near-duplicate detection + similarity search for the training-data
   * pipeline: MinHash+LSH, SimHash, n-gram Jaccard, and
@@ -82,15 +82,12 @@ object SimilarityQueries {
 
   /** (doc_id, hs): distinct word-3gram hashes per document — the
     * shared input of every shingle-based near-dup operator.
-    * Memoized per (app, dir): slim, deterministic, consumed by the
-    * minhash pair search AND the clustering pipeline. */
-  private val shingleCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  private[operators] def hashedShingleDocs(s: SparkSession,
+    * Memoized per (app, dir) ([[graft.core.Artifacts.memo]]): slim,
+    * deterministic, consumed by the minhash pair search AND the
+    * clustering pipeline. */
+  private[graft] def hashedShingleDocs(s: SparkSession,
       dir: String): DataFrame =
-    shingleCache.getOrElseUpdate(
-      s.sparkContext.applicationId + ":" + dir,
+    Artifacts.memo(s, dir, "shingle_docs")(
       // fanOut: the shingle hashing below is the expensive part and
       // would otherwise run inside the single-row-group scan task
       Tables.fanOut(Tables.documents(s, dir), "doc_id")
@@ -123,20 +120,16 @@ object SimilarityQueries {
     * chains of pairwise-near-but-transitively-far docs would need
     * multiple anchors per bucket (min + evenly spaced members) at
     * K× the candidate rows; this engine documents the single-anchor
-    * contract instead of paying that multiplier blind. */
-  private[operators] def lshCandidatePairs(s: SparkSession,
+    * contract instead of paying that multiplier blind.
+    *
+    * `ckpt` materializes the banded table (read by the census and
+    * both join sides): callers pass an [[graft.core.Artifacts.slot]],
+    * so the previous generation's blocks are freed. */
+  private[operators] def lshCandidatePairs(
       docs: DataFrame, nHashes: Int, bands: Int, maxBucket: Int,
-      starHotBuckets: Boolean, slotKey: Option[String] = None)
+      starHotBuckets: Boolean, ckpt: DataFrame => DataFrame)
       : DataFrame = {
     val rows = nHashes / bands
-    val ckpt: DataFrame => DataFrame = slotKey match {
-      // per-invocation callers (ddMinhashLsh) pass a slot key so the
-      // previous generation's banded checkpoint is freed; memoized
-      // callers (computeClusterCc) keep the plain one-time checkpoint
-      case Some(k) => graft.core.CkptSlots.checkpoint(
-        s.sparkContext.applicationId + ":" + k)
-      case None => _.localCheckpoint()
-    }
     val banded = docs
       .withColumn("sig", minhashSig(col("hs"), nHashes))
       .select(col("doc_id"),
@@ -203,9 +196,9 @@ object SimilarityQueries {
     * between a bounded join and a runaway one). */
   def ddMinhashLsh(s: SparkSession, dir: String): DataFrame = {
     val docs = hashedShingleDocs(s, dir)
-    val cand = lshCandidatePairs(s, docs, nHashes = 32, bands = 4,
+    val cand = lshCandidatePairs(docs, nHashes = 32, bands = 4,
       maxBucket = 50, starHotBuckets = false,
-      slotKey = Some("mh_banded:" + dir))
+      ckpt = Artifacts.slot(s, dir, "mh_banded"))
     jaccardPairs(docs, cand)
       .orderBy(col("jaccard").desc, col("id_a"), col("id_b"))
       .limit(20)
@@ -257,15 +250,12 @@ object SimilarityQueries {
     * Gram hashes use the engine-portable md5-60 hash
     * (graft.core.PortableHash) so the full bit-vote is replicated in
     * the DuckDB oracle. */
-  /** One simhash pass per (JVM, sfDir): the hash table feeds both
-    * dd_simhash and dd_simhash_pairs; it is deterministic, slim
-    * (doc_id + one long), and localCheckpointed by the consumer. */
-  private val simhashCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
+  /** One simhash pass per (context, sfDir)
+    * ([[graft.core.Artifacts.memo]]): the hash table feeds both
+    * dd_simhash and dd_simhash_pairs; it is deterministic and slim
+    * (doc_id + one long). */
   def ddSimhash(s: SparkSession, dir: String): DataFrame =
-    simhashCache.getOrElseUpdate(
-      s.sparkContext.applicationId + ":" + dir,
+    Artifacts.memo(s, dir, "simhash")(
       computeSimhash(s, dir).localCheckpoint())
 
   private def computeSimhash(s: SparkSession, dir: String): DataFrame = {
@@ -430,8 +420,7 @@ object SimilarityQueries {
       .select(col("doc_id"),
         transform(wordGramExpr("words", 3), g => xxhash64(g)).as("g"))
       .withColumn("bucket", array_min(col("g")))
-      .transform(graft.core.CkptSlots.checkpoint(
-        s.sparkContext.applicationId + ":ngram_docs:" + dir))
+      .transform(Artifacts.slot(s, dir, "ngram_docs"))
       // consumed by census + both join sides
     val smallBuckets = docs.groupBy(col("bucket"))
       .agg(count(lit(1)).as("n"))
@@ -897,8 +886,7 @@ object SimilarityQueries {
     val emb = cleanEmbeddings(s, dir)
       .select(col("vec_id"), col("e"))
       .withColumn("bucket", expr(s"signlsh_bucket(e, $planes)"))
-      .transform(graft.core.CkptSlots.checkpoint(
-        s.sparkContext.applicationId + ":embnd:" + dir))
+      .transform(Artifacts.slot(s, dir, "embnd"))
       // consumed by both self-join sides
     val a = emb.select(col("bucket"), col("vec_id").as("id_a"),
       col("e").as("e_a"))
@@ -1075,8 +1063,7 @@ object SimilarityQueries {
     val planes = AnnPlanes
     val emb = cleanEmbeddings(s, dir)
       .withColumn("bucket", expr(s"signlsh_bucket(e, $planes)"))
-      .transform(graft.core.CkptSlots.checkpoint(
-        s.sparkContext.applicationId + ":lsh_adapt:" + dir))
+      .transform(Artifacts.slot(s, dir, "lsh_adapt"))
       // re-read once per radius level
     val qRow = emb.filter(col("vec_id") === 0)
       .select(col("bucket"), col("e")).head()
@@ -1682,8 +1669,7 @@ object SimilarityQueries {
   def simExactPairs(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
-      .transform(graft.core.CkptSlots.checkpoint(
-        s.sparkContext.applicationId + ":exact_pairs:" + dir))
+      .transform(Artifacts.slot(s, dir, "exact_pairs"))
       // consumed by both self-join sides
     val n = emb.count() // cheap: counts the checkpointed blocks
     require(n <= ExactPairsMaxRows,
@@ -1792,8 +1778,7 @@ object SimilarityQueries {
     val members = edJoinKeys(s, dir)
       .withColumn("kid",
         min(col("doc_id")).over(Window.partitionBy(col("k"))))
-      .transform(graft.core.CkptSlots.checkpoint(
-        s.sparkContext.applicationId + ":edjoin_members:" + dir))
+      .transform(Artifacts.slot(s, dir, "edjoin_members"))
     val reps = members.filter(col("doc_id") === col("kid"))
       .select(col("doc_id"), col("k"))
     // one candidate row + one banded-levenshtein verify per DISTINCT
@@ -1812,7 +1797,7 @@ object SimilarityQueries {
     // edJoinCandidates (computed once instead of once per self-join
     // side).
     val classPairs = edJoinCandidates(reps,
-        slotTag = s.sparkContext.applicationId + ":edjoin_prefix:" + dir)
+        prefixCkpt = Artifacts.slot(s, dir, "edjoin_prefix"))
       .join(reps.select(col("doc_id").as("id_a"), col("k").as("ka")),
         "id_a")
       .join(reps.select(col("doc_id").as("id_b"), col("k").as("kb")),
@@ -1874,7 +1859,7 @@ object SimilarityQueries {
     * (4.6×) and end-to-end wall 230 → 23 s (10×, the banded
     * levenshtein compounding); growth exponent 1.17 → 1.03. */
   private[operators] def edJoinCandidates(keys: DataFrame,
-      q: Int = EdJoinQ, slotTag: String = ""): DataFrame = {
+      prefixCkpt: DataFrame => DataFrame, q: Int = EdJoinQ): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val prefixLen = EdJoinMaxDist * q + 1
     // Pigeonhole floor (ADVICE r16): a key of length L has L−q+1
@@ -1919,12 +1904,9 @@ object SimilarityQueries {
     // frequency census, AND the per-doc ranking window (r22, measured
     // at sf0.1: candidates 0.92 → 0.69 s; the saved recompute grows
     // with the corpus — the census aggregates every gram occurrence).
-    // Callers with a stable call-site tag get the slot-keyed
-    // checkpoint (one live generation, freed on the next invocation);
-    // tagless callers (specs probing shapes) keep the pure plan.
-    val prefix =
-      if (slotTag.isEmpty) prefixPlan
-      else graft.core.CkptSlots.checkpoint(slotTag)(prefixPlan)
+    // Callers pass a slot checkpoint (one live generation, freed on
+    // the next invocation).
+    val prefix = prefixCkpt(prefixPlan)
     prefix.as("a")
       .join(prefix.as("b"),
         col("a.g") === col("b.g") &&
@@ -2051,8 +2033,7 @@ object SimilarityQueries {
   def ddContainment(s: SparkSession, dir: String): DataFrame = {
     // fanOut: gram hashing + per-doc sort is the dominant cost and
     // would otherwise serialize inside the single-row-group scan task
-    val docs = graft.core.CkptSlots.checkpoint(
-      s.sparkContext.applicationId + ":cont_docs:" + dir)(
+    val docs = Artifacts.slot(s, dir, "cont_docs")(
       Tables.fanOut(Tables.documents(s, dir), "doc_id")
         .withColumn("words", split(col("text"), " "))
         // sort ONCE per doc so the verify can run the native
@@ -2065,8 +2046,7 @@ object SimilarityQueries {
     val grams = docs.select(col("doc_id"), col("na"),
       explode(col("g")).as("gr"))
     val freq = grams.groupBy(col("gr")).agg(count(lit(1)).as("nf"))
-    containmentServe(
-      s.sparkContext.applicationId + ":cont_classed:" + dir, docs, freq)
+    containmentServe(Artifacts.slot(s, dir, "cont_classed"), docs, freq)
   }
 
   /** [[ddContainment]] served from the PERSISTED containment index
@@ -2087,8 +2067,7 @@ object SimilarityQueries {
     val docs = s.read.parquet(paths.docs)
     val freq = s.read.parquet(paths.freq)
       .groupBy(col("gr")).agg(sum(col("nf")).as("nf"))
-    containmentServe(
-      s.sparkContext.applicationId + ":cont_classed_idx:" + dir,
+    containmentServe(Artifacts.slot(s, dir, "cont_classed_idx"),
       docs, freq)
   }
 
@@ -2115,8 +2094,8 @@ object SimilarityQueries {
     * 89 s wall in stop-the-world GC; class pairs stay corpus-shaped.
     * Cost where no duplicates exist: one extra hash exchange of the
     * doc fingerprints (the window below) and two slim id joins. */
-  private def containmentServe(classedSlot: String, docs0: DataFrame,
-      freq: DataFrame): DataFrame = {
+  private def containmentServe(classedSlot: DataFrame => DataFrame,
+      docs0: DataFrame, freq: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // r22 session 2: the class window (min doc_id over partition-by-
     // gram-array) feeds EIGHT branches of the final plan — members
@@ -2127,9 +2106,8 @@ object SimilarityQueries {
     // shows 9 Window nodes, 0 ReusedExchange). Slot-checkpointing the
     // classed table runs that exchange+sort ONCE per invocation; every
     // branch then block-scans the materialized rows. Fresh per
-    // invocation (CkptSlots), shared by both twins via their own slot
-    // keys.
-    val classed = graft.core.CkptSlots.checkpoint(classedSlot)(
+    // invocation (an Artifacts slot), each twin through its own slot.
+    val classed = classedSlot(
       docs0.withColumn("rep",
         min(col("doc_id")).over(Window.partitionBy(col("g")))))
     // (doc_id → rep, na): slim expansion map, one row per doc
@@ -2332,8 +2310,7 @@ object SimilarityQueries {
     import org.apache.spark.sql.expressions.Window
     val emb = cleanEmbeddings(s, dir)
       .withColumn("bucket", expr(s"signlsh_bucket(e, $AnnPlanes)"))
-      .transform(graft.core.CkptSlots.checkpoint(
-        s.sparkContext.applicationId + ":sem_emb:" + dir))
+      .transform(Artifacts.slot(s, dir, "sem_emb"))
       // consumed by moments + both prune sides
     val qv = emb.select(col("vec_id"), col("bucket"),
       posexplode(expr(
@@ -2366,8 +2343,7 @@ object SimilarityQueries {
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("bucket"))
           .orderBy(col("cosc").desc, col("vec_id"))))
-      .transform(graft.core.CkptSlots.checkpoint(
-        s.sparkContext.applicationId + ":sem_rnk:" + dir))
+      .transform(Artifacts.slot(s, dir, "sem_rnk"))
       // both sides of the prune join + output
     val withE = emb.select(col("vec_id"), col("e"))
     // Rank-window prune join, BANDED on rank blocks (r17 — the 150k

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Artifacts, Tables}
 
 /** Salted join for skewed keys — the manual countermeasure when
   * AQE's skew-join splitting isn't available or the skew is extreme
@@ -165,23 +165,18 @@ object SkewJoin {
     * just the mechanics — TPC-H l_orderkey is uniform, so the sampled
     * histogram picks salt 1 and the plan is the plain broadcast join;
     * point it at a hot-keyed fact table and the same call salts
-    * (SkewJoinSpec covers both decisions). */
-  /** One salt decision per (context, input): the key histogram is a
+    * (SkewJoinSpec covers both decisions).
+    *
+    * One salt decision per (context, input): the key histogram is a
     * property of the DATA, so re-probing on every invocation of the
     * same registered query pays two sampling jobs for an answer that
-    * cannot change (same memoization contract as the shingle/KMeans
-    * caches; keyed by applicationId so a new context never reuses a
-    * dead decision). */
-  private val saltCache =
-    scala.collection.concurrent.TrieMap.empty[String, Int]
-
+    * cannot change ([[graft.core.Artifacts.memo]]). */
   def j6SkewSalted(s: SparkSession, dir: String): DataFrame = {
     val big = Tables.lineitem(s, dir)
       .select("l_orderkey", "l_linenumber", "l_quantity")
     val small = Tables.orders(s, dir)
       .select(col("o_orderkey").as("l_orderkey"), col("o_orderpriority"))
-    val salt = saltCache.getOrElseUpdate(
-      s.sparkContext.applicationId + ":" + dir,
+    val salt = Artifacts.memo(s, dir, "j6_salt")(
       adaptiveSalt(big, "l_orderkey"))
     (if (salt <= 1) big.join(small, Seq("l_orderkey"))
      else saltedJoin(big, small, key = "l_orderkey",

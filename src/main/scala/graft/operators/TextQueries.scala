@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Artifacts, Tables}
 
 /** Text-analysis + exact-dedup operators for the training-data
   * pipeline surface (builder brief: dedup, language-ID, quality
@@ -140,15 +140,9 @@ object TextQueries {
   /** One winnow-fp pass per (JVM, sfDir): the fingerprint table now
     * feeds t_winnow_fp, dd_winnow_pairs AND dd_dup_spans; it is
     * deterministic, slim (doc_id + one long), and the fp selection
-    * is the expensive map-side stage — same memoization contract as
-    * the simhash/shingle/KMeans caches (keyed by applicationId so a
-    * new context never reuses a dead plan). */
-  private val winnowFpCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
+    * is the expensive map-side stage ([[graft.core.Artifacts.memo]]). */
   def tWinnowFp(s: SparkSession, dir: String): DataFrame =
-    winnowFpCache.getOrElseUpdate(
-      s.sparkContext.applicationId + ":" + dir,
+    Artifacts.memo(s, dir, "winnow_fp")(
       computeWinnowFp(s, dir).localCheckpoint())
 
   private def computeWinnowFp(s: SparkSession, dir: String): DataFrame = {

@@ -1,11 +1,9 @@
 package graft.sources
 
-import scala.collection.concurrent.TrieMap
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlShims, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{PortableHash, Tables}
+import graft.core.{Artifacts, PortableHash, Tables}
 
 /** Persisted secondary-index surfaces: a positional trigram postings
   * table over `documents` and an IVF (coarse-quantizer) index over
@@ -40,18 +38,18 @@ import graft.core.{PortableHash, Tables}
   * merge is a partition-aligned append and the merged table is
   * row-identical to a one-shot build (IndexStoreSpec pins this).
   *
-  * Builds are memoized per (JVM, dataset) and written under a
-  * PROCESS-UNIQUE root (ADVICE r13): KMeans cell ids depend on the
-  * fitting session's partitioning, so an index from another JVM could
-  * disagree with this JVM's probe choices, and a shared on-disk path
-  * would let a concurrent or later JVM overwrite files this process —
-  * or a dumped oracle SQL — still reads. With per-process roots every
-  * built index is immutable after its build: the serve path, the
-  * specs, and the DuckDB compare (which runs AFTER Verify exits and
-  * reads the path Verify interpolated) all see exactly the bytes this
-  * process wrote. Roots live under the system temp dir and are left
-  * for the OS to reap — they MUST survive process exit for the
-  * oracle compare.
+  * Builds are memoized per (JVM, dataset) ([[Artifacts.built]]) and
+  * written under a PROCESS-UNIQUE root (ADVICE r13): KMeans cell ids
+  * depend on the fitting session's partitioning, so an index from
+  * another JVM could disagree with this JVM's probe choices, and a
+  * shared on-disk path would let a concurrent or later JVM overwrite
+  * files this process — or a dumped oracle SQL — still reads. With
+  * per-process roots every built index is immutable after its build:
+  * the serve path, the specs, and the DuckDB compare (which runs AFTER
+  * Verify exits and reads the path Verify interpolated) all see
+  * exactly the bytes this process wrote. Roots live under the system
+  * temp dir and are left for the OS to reap — they MUST survive
+  * process exit for the oracle compare.
   */
 object IndexStore {
 
@@ -106,33 +104,16 @@ object IndexStore {
     * prunes to ≤ that many of 64 partition dirs. */
   val WordBuckets = 64
 
-  private val trgmBuilt = TrieMap.empty[String, String]
-  private val ivfBuilt = TrieMap.empty[String, IvfPaths]
-  private val wordBuilt = TrieMap.empty[String, WordIndexPaths]
+  /** Per-dataset index version ([[Artifacts.indexVersion]]): raised
+    * only where files that could already have been read change — the
+    * serving-view refreshes below and [[bumpVersion]] — so every memo
+    * derived from the indexes recomputes instead of serving a dead
+    * generation. A first build does not raise it. A process that
+    * mutates index files outside the refresh paths must call
+    * [[bumpVersion]] itself (Maintenance.refreshAll does). */
+  def indexVersion(dir: String): Long = Artifacts.indexVersion(dir)
 
-  /** Monotonic per-dataset index VERSION (r20, ADVICE r19): bumped by
-    * every index build / serving-view refresh for `dir` in this JVM.
-    * Caches that memoize index-DERIVED structures (e.g. [[graft
-    * .operators.PipelineQueries]]' probe context) key on this
-    * version, so a rebuild or append within one long-lived
-    * application invalidates them instead of silently serving stale
-    * digests/census/reps. A process that mutates index files outside
-    * the ensure/refresh paths must call [[bumpVersion]] itself
-    * (Maintenance.refreshAll does). */
-  private val indexVersions = TrieMap.empty[String, Long]
-
-  def indexVersion(dir: String): Long = indexVersions.getOrElse(dir, 0L)
-
-  def bumpVersion(dir: String): Unit =
-    indexVersions.updateWith(dir)(v => Some(v.getOrElse(0L) + 1L))
-
-  /** Memoized build wrapper every ensure* body runs through: build
-    * once per (JVM, dir), and bump the dataset's index version when a
-    * build actually ran — the single choke point that keeps
-    * version-keyed derived caches honest. */
-  private def built[A](cache: TrieMap[String, A], dir: String)(
-      build: => A): A =
-    cache.getOrElseUpdate(dir, { val a = build; bumpVersion(dir); a })
+  def bumpVersion(dir: String): Unit = Artifacts.bumpVersion(dir)
 
   /** Per-(process, dataset) index root under the system temp dir.
     * Process-unique so no other JVM can overwrite it (ADVICE r13);
@@ -234,7 +215,7 @@ object IndexStore {
     * postings for `dir`'s documents; returns the table path. Once
     * per (JVM, dir). */
   def ensureTrgmPostings(s: SparkSession, dir: String): String =
-    built(trgmBuilt, dir) {
+    Artifacts.built(dir, "trgm") {
       val path = indexRoot(dir).resolve("trgm_postings").toString
       // fanOut (r21): every build below runs heavy per-doc compute
       // (shingling, gram hashing, chunking) that would otherwise
@@ -284,7 +265,7 @@ object IndexStore {
     * ONLY these tables — the corpus text is never re-tokenized at
     * query time. Once per (JVM, dir). */
   def ensureWordPostings(s: SparkSession, dir: String): WordIndexPaths =
-    built(wordBuilt, dir) {
+    Artifacts.built(dir, "word") {
       val root = indexRoot(dir)
       val paths = WordIndexPaths(
         root.resolve("word_postings").toString,
@@ -335,7 +316,7 @@ object IndexStore {
     * it end-to-end (the trigram-postings discipline). Once per
     * (JVM, dir). */
   def ensureIvf(s: SparkSession, dir: String): IvfPaths =
-    built(ivfBuilt, dir) {
+    Artifacts.built(dir, "ivf") {
       import org.apache.spark.ml.clustering.KMeans
       import org.apache.spark.ml.functions.array_to_vector
       val root = indexRoot(dir)
@@ -386,8 +367,6 @@ object IndexStore {
 
   case class MinhashPaths(shingles: String, bands: String,
       cbands: String, cstats: String)
-
-  private val mhBuilt = TrieMap.empty[String, MinhashPaths]
 
   /** Persisted MinHash dedup index (the trigram/word/IVF build→serve
     * discipline applied to the near-dup family): a shingle-hash
@@ -442,7 +421,7 @@ object IndexStore {
           g => xxhash64(g))).as("g"))
 
   def ensureMinhash(s: SparkSession, dir: String): MinhashPaths =
-    built(mhBuilt, dir) {
+    Artifacts.built(dir, "minhash") {
       val root = indexRoot(dir)
       val paths = MinhashPaths(
         root.resolve("mh_shingles").toString,
@@ -480,6 +459,8 @@ object IndexStore {
         cband.groupBy(col("band"), col("bhash"))
           .agg(count(lit(1)).as("n"), min(col("doc_id")).as("rep"))
           .write.mode(mode).parquet(paths.cstats)
+        GraftSqlShims.unpersistLocalCheckpoint(cband)
+        GraftSqlShims.unpersistLocalCheckpoint(sh)
       }
       write(docs.filter(
         pmod(col("doc_id"), lit(TrgmDeltaMod.toLong))
@@ -491,8 +472,6 @@ object IndexStore {
     }
 
   case class SimhashPaths(sigs: String)
-
-  private val shBuilt = TrieMap.empty[String, SimhashPaths]
 
   /** Persisted SimHash near-dup index (VERDICT r15 task #4 — the
     * last dedup family member still recomputing signatures per run):
@@ -512,7 +491,7 @@ object IndexStore {
     * SimhashIndexSpec; the serve twin's hash-equality to the scan
     * twin certifies the content end-to-end). Once per (JVM, dir). */
   def ensureSimhash(s: SparkSession, dir: String): SimhashPaths =
-    built(shBuilt, dir) {
+    Artifacts.built(dir, "simhash") {
       val paths = SimhashPaths(
         indexRoot(dir).resolve("simhash_sigs").toString)
       // fanOut (r21): every build below runs heavy per-doc compute
@@ -543,8 +522,6 @@ object IndexStore {
 
   case class Gram13Paths(grams: String)
 
-  private val gram13Built = TrieMap.empty[String, Gram13Paths]
-
   /** Persisted 13-gram fingerprint index for decontamination: the
     * per-doc distinct 13-gram hashes (doc_id, g) — append-stable
     * facts. This is the textbook case for the build→serve split:
@@ -553,7 +530,7 @@ object IndexStore {
     * maintained gram index with each new eval list rather than
     * re-shingling the corpus per release. Once per (JVM, dir). */
   def ensureGram13(s: SparkSession, dir: String): Gram13Paths =
-    built(gram13Built, dir) {
+    Artifacts.built(dir, "gram13") {
       val paths = Gram13Paths(
         indexRoot(dir).resolve("decon_grams").toString)
       // fanOut (r21): every build below runs heavy per-doc compute
@@ -574,8 +551,6 @@ object IndexStore {
 
   case class WinnowPaths(fps: String)
 
-  private val winnowBuilt = TrieMap.empty[String, WinnowPaths]
-
   /** Persisted winnowing fingerprint index: the selected (doc_id,
     * fp) rows — per-doc facts from the position-local windowed-min
     * rule, so chunking of NEW docs never disturbs existing rows and
@@ -585,7 +560,7 @@ object IndexStore {
     * pair-search serve into joins over a slim long-pair table. Once
     * per (JVM, dir). */
   def ensureWinnow(s: SparkSession, dir: String): WinnowPaths =
-    built(winnowBuilt, dir) {
+    Artifacts.built(dir, "winnow") {
       val paths = WinnowPaths(indexRoot(dir).resolve("winnow_fps").toString)
       // fanOut (r21): every build below runs heavy per-doc compute
       // (shingling, gram hashing, chunking) that would otherwise
@@ -609,8 +584,6 @@ object IndexStore {
 
   case class CdcPaths(chunks: String, census: String)
 
-  private val cdcBuilt = TrieMap.empty[String, CdcPaths]
-
   /** Persisted content-defined-chunking index: per-doc chunk digests
     * (`cdc_chunks`: doc_id, cid, h — append-stable facts; the
     * boundary rule is LOCAL to each doc, so a doc's chunking never
@@ -622,7 +595,7 @@ object IndexStore {
     * chunk-construction pipeline runs once, on ingest. Once per
     * (JVM, dir). */
   def ensureCdcChunks(s: SparkSession, dir: String): CdcPaths =
-    built(cdcBuilt, dir) {
+    Artifacts.built(dir, "cdc") {
       val root = indexRoot(dir)
       val paths = CdcPaths(
         root.resolve("cdc_chunks").toString,
@@ -637,6 +610,7 @@ object IndexStore {
         Tables.packForWrite(ch).write.mode(mode).parquet(paths.chunks)
         ch.groupBy(col("h")).agg(count(lit(1)).as("occ"))
           .write.mode(mode).parquet(paths.census)
+        GraftSqlShims.unpersistLocalCheckpoint(ch)
       }
       write(docs.filter(
         pmod(col("doc_id"), lit(TrgmDeltaMod.toLong))
@@ -648,8 +622,6 @@ object IndexStore {
     }
 
   case class ContainmentPaths(docs: String, freq: String)
-
-  private val contBuilt = TrieMap.empty[String, ContainmentPaths]
 
   /** Persisted containment-join index: the per-doc SORTED gram-hash
     * fingerprints (`cont_docs`: doc_id, g, na — the probe, posting,
@@ -665,7 +637,7 @@ object IndexStore {
     * hashing, per-doc sorts, and the corpus-wide frequency
     * aggregate. Once per (JVM, dir). */
   def ensureContainment(s: SparkSession, dir: String): ContainmentPaths =
-    built(contBuilt, dir) {
+    Artifacts.built(dir, "containment") {
       val root = indexRoot(dir)
       val paths = ContainmentPaths(
         root.resolve("cont_docs").toString,
@@ -687,6 +659,7 @@ object IndexStore {
         fp.select(explode(col("g")).as("gr"))
           .groupBy(col("gr")).agg(count(lit(1)).as("nf"))
           .write.mode(mode).parquet(paths.freq)
+        GraftSqlShims.unpersistLocalCheckpoint(fp)
       }
       write(docs.filter(
         pmod(col("doc_id"), lit(TrgmDeltaMod.toLong))
@@ -716,8 +689,6 @@ object IndexStore {
   case class GraphPaths(pairs: String, freq: String, adj: String,
       stats: String)
 
-  private val graphBuilt = TrieMap.empty[String, GraphPaths]
-
   /** Persisted co-purchase graph index (VERDICT r15 task #1 — the
     * build→serve twin discipline applied to the graph family): the
     * basket pair census `pairs` (u < v, partial co-occurrence count
@@ -734,7 +705,7 @@ object IndexStore {
     * hash-equality to the scan twins certifies the persisted content
     * end-to-end. Once per (JVM, dir). */
   def ensureGraphEdges(s: SparkSession, dir: String): GraphPaths =
-    built(graphBuilt, dir) {
+    Artifacts.built(dir, "graph_edges") {
       val root = indexRoot(dir)
       val paths = GraphPaths(
         root.resolve("graph_pairs").toString,
@@ -764,6 +735,7 @@ object IndexStore {
           .write.mode(mode).partitionBy("bucket").parquet(paths.pairs)
         items.groupBy(col("p")).agg(count(lit(1)).as("item_n"))
           .write.mode(mode).parquet(paths.freq)
+        GraftSqlShims.unpersistLocalCheckpoint(items)
       }
       write(split(base = true), "overwrite")
       write(split(base = false), "append")
@@ -798,8 +770,8 @@ object IndexStore {
     deg.agg(count(lit(1)).as("n_nodes"))
       .crossJoin(edges.agg(count(lit(1)).as("n_edges")))
       .write.mode("overwrite").parquet(paths.stats)
-    org.apache.spark.sql.GraftSqlShims.unpersistLocalCheckpoint(deg)
-    org.apache.spark.sql.GraftSqlShims.unpersistLocalCheckpoint(edges)
+    GraftSqlShims.unpersistLocalCheckpoint(deg)
+    GraftSqlShims.unpersistLocalCheckpoint(edges)
   }
 
   /** Refresh path for the graph serving views after a delta append to
@@ -818,8 +790,6 @@ object IndexStore {
 
   case class BaseClusterPaths(labels: String, edges: String)
 
-  private val baseClustersBuilt = TrieMap.empty[String, BaseClusterPaths]
-
   /** Persisted near-dup cluster state of the BASE split (r18): the
     * verified edge set and the converged min labels over base docs,
     * both derived from the persisted MinHash cluster bands +
@@ -829,7 +799,7 @@ object IndexStore {
     * derived serving view refreshed from the maintained index
     * tables. Once per (JVM, dir). */
   def ensureBaseClusters(s: SparkSession, dir: String): BaseClusterPaths =
-    built(baseClustersBuilt, dir)(writeBaseClusters(s, dir))
+    Artifacts.built(dir, "base_clusters")(writeBaseClusters(s, dir))
 
   private def writeBaseClusters(s: SparkSession,
       dir: String): BaseClusterPaths = {
@@ -849,14 +819,8 @@ object IndexStore {
     * maintained MinHash index tables; bumps the index version. Same
     * maintenance-window caveat as [[refreshGraphViews]]. */
   private[graft] def refreshBaseClusters(s: SparkSession,
-      dir: String): BaseClusterPaths = {
-    val paths = writeBaseClusters(s, dir)
-    baseClustersBuilt.put(dir, paths)
-    bumpVersion(dir)
-    paths
-  }
-
-  private val ranksBuilt = TrieMap.empty[String, String]
+      dir: String): BaseClusterPaths =
+    Artifacts.rebuilt(dir, "base_clusters")(writeBaseClusters(s, dir))
 
   /** Persisted converged PageRank of the BASE-split part↔supplier
     * graph (r18) — the serving view the incremental query
@@ -867,7 +831,7 @@ object IndexStore {
     * serve then pays 2–3 power steps instead of the from-scratch 8.
     * Once per (JVM, dir). */
   def ensureBaseRanks(s: SparkSession, dir: String): String =
-    built(ranksBuilt, dir)(writeBaseRanks(s, dir))
+    Artifacts.built(dir, "base_ranks")(writeBaseRanks(s, dir))
 
   private def writeBaseRanks(s: SparkSession, dir: String): String = {
     val path = indexRoot(dir).resolve("graph_base_ranks").toString
@@ -882,12 +846,8 @@ object IndexStore {
     * maintained base split; bumps the index version. Same
     * maintenance-window caveat as [[refreshGraphViews]]. */
   private[graft] def refreshBaseRanks(s: SparkSession,
-      dir: String): String = {
-    val path = writeBaseRanks(s, dir)
-    ranksBuilt.put(dir, path)
-    bumpVersion(dir)
-    path
-  }
+      dir: String): String =
+    Artifacts.rebuilt(dir, "base_ranks")(writeBaseRanks(s, dir))
 
   /** Corpus catalog (r18): the per-document ownership/digest table a
     * lakehouse maintains as data arrives — (doc_id, source,
@@ -899,10 +859,8 @@ object IndexStore {
     * same as every other index family). */
   case class CatalogPaths(digests: String, stats: String)
 
-  private val catalogBuilt = TrieMap.empty[String, CatalogPaths]
-
   def ensureCatalog(s: SparkSession, dir: String): CatalogPaths =
-    built(catalogBuilt, dir) {
+    Artifacts.built(dir, "catalog") {
       val root = indexRoot(dir)
       val paths = CatalogPaths(
         root.resolve("catalog_digests").toString,
@@ -926,6 +884,7 @@ object IndexStore {
         d.groupBy(col("split"), col("source"))
           .agg(count(lit(1)).as("n_docs"))
           .write.mode(mode).parquet(paths.stats)
+        GraftSqlShims.unpersistLocalCheckpoint(d)
       }
       write(base = true)
       write(base = false)
@@ -947,8 +906,6 @@ object IndexStore {
 
   case class PqPaths(codebooks: String, codes: String)
 
-  private val pqBuilt = TrieMap.empty[String, PqPaths]
-
   /** Fit the PQ codebooks on the IVF base split and encode the whole
     * corpus, cell-partitioned next to the IVF index. The INPUT is the
     * persisted IVF assignments table (vectors + cells already
@@ -960,7 +917,7 @@ object IndexStore {
     * incremental-maintenance path and the serve oracle certifies it
     * end-to-end. Once per (JVM, dir). */
   def ensurePq(s: SparkSession, dir: String): PqPaths =
-    built(pqBuilt, dir) {
+    Artifacts.built(dir, "pq") {
       import org.apache.spark.ml.clustering.KMeans
       import org.apache.spark.ml.functions.array_to_vector
       val ivf = ensureIvf(s, dir)
@@ -1005,6 +962,7 @@ object IndexStore {
         .coalesce(1)
         .write.mode("overwrite").parquet(paths.codebooks)
       appendPq(s, paths, base, "overwrite")
+      GraftSqlShims.unpersistLocalCheckpoint(base)
       appendPq(s, paths, split(base = false), "append")
       paths
     }

@@ -3,13 +3,13 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Artifacts, Tables}
 
 /** Storage-layout operators promoted into the registry (VERDICT r4/r5
   * task: "layout-pruned aggregate with a plan assert"): a
   * partition-pruned aggregate and a manifest-skipped ranged aggregate.
-  * Both materialize a laid-out copy of the source under a
-  * deterministic temp path and then run the query THROUGH the layout,
+  * Both materialize a laid-out copy of the source under the dataset's
+  * process-unique index root and then run the query THROUGH the layout,
   * so Verify/Bench exercise the pruning path itself; the oracle is
   * plain SQL over the original table — layout must be
   * semantics-preserving.
@@ -21,21 +21,24 @@ import graft.core.Tables
 object LayoutQueries {
   type Q = (SparkSession, String) => DataFrame
 
-  /** Deterministic per-SF temp root (idempotent overwrite per call). */
-  private def tmpRoot(dir: String): String = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    s"${System.getProperty("java.io.tmpdir")}/graft_layout_$tag"
-  }
+  /** Where layout copy `name` of `dir` lives: under the process-unique
+    * [[IndexStore.indexRoot]], so no other JVM can overwrite it and
+    * the 12 h reaper removes it. */
+  private[graft] def layoutPath(dir: String, name: String): String =
+    IndexStore.indexRoot(dir).resolve("layout").resolve(name).toString
 
-  /** One layout write per (app, dir): ingest writes the layout once
+  /** Write layout copy `name` once per (JVM, dir)
+    * ([[graft.core.Artifacts.built]]): ingest writes the layout once
     * and every query amortizes it — re-writing per call would make
     * the bench measure the writer, not the pruned read these
-    * operators exist to demonstrate. */
-  private val written =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
-
-  private def writeOnce(s: SparkSession, key: String)(w: => Unit): Unit =
-    written.getOrElseUpdate(s.sparkContext.applicationId + ":" + key, w)
+    * operators exist to demonstrate. Returns the copy's path. */
+  private def layoutCopy(dir: String, name: String)(
+      write: String => Unit): String =
+    Artifacts.built(dir, "layout_" + name) {
+      val path = layoutPath(dir, name)
+      write(path)
+      path
+    }
 
   /** Aggregate over a hive-partitioned copy: documents partitioned by
     * lang, filtered to one partition. The scan must show
@@ -43,9 +46,8 @@ object LayoutQueries {
     * filter never lists, let alone reads, the other languages'
     * directories. */
   def l4PartitionPruned(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${tmpRoot(dir)}/documents_by_lang"
-    writeOnce(s, path)(Tables.documents(s, dir)
-      .write.partitionBy("lang").mode("overwrite").parquet(path))
+    val path = layoutCopy(dir, "documents_by_lang")(Tables.documents(s, dir)
+      .write.partitionBy("lang").mode("overwrite").parquet(_))
     s.read.parquet(path)
       .filter(col("lang") === "en")
       .groupBy(col("lang"))
@@ -60,11 +62,10 @@ object LayoutQueries {
     * ([[DataSkipping.prunedRead]]). LayoutSpec asserts the candidate
     * file list is a strict subset. */
   def l5ManifestSkip(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${tmpRoot(dir)}/orders_clustered"
-    writeOnce(s, path)(Tables.orders(s, dir)
+    val path = layoutCopy(dir, "orders_clustered")(Tables.orders(s, dir)
       .repartitionByRange(4, col("o_orderkey"))
       .sortWithinPartitions("o_orderkey")
-      .write.mode("overwrite").parquet(path))
+      .write.mode("overwrite").parquet(_))
     val manifest = DataSkipping.buildManifest(s, path, "o_orderkey")
     DataSkipping.prunedRead(s, manifest, "o_orderkey", 1000L, 5000L)
       .agg(count(lit(1)).cast("long").as("n_orders"),
@@ -93,9 +94,8 @@ object LayoutQueries {
     * compare. FS listing is driver-side layout METADATA, same
     * contract as the DataSkipping manifest. */
   def l9Compaction(s: SparkSession, dir: String): DataFrame = {
-    val fragPath = s"${tmpRoot(dir)}/documents_fragmented"
-    val compPath = s"${tmpRoot(dir)}/documents_compacted"
-    writeOnce(s, compPath) {
+    val compPath = layoutCopy(dir, "documents_compacted") { compPath =>
+      val fragPath = layoutPath(dir, "documents_fragmented")
       Tables.documents(s, dir).repartition(64)
         .write.mode("overwrite").parquet(fragPath)
       s.read.parquet(fragPath)
@@ -105,7 +105,7 @@ object LayoutQueries {
         .mode("overwrite").parquet(compPath)
     }
     // resolve the filesystem OF compPath, not the default FS — the
-    // audit must keep working if tmpRoot points at s3a/hdfs (ADVICE r11)
+    // audit must keep working if the root points at s3a/hdfs (ADVICE r11)
     val compHadoopPath = new org.apache.hadoop.fs.Path(compPath)
     val fs = compHadoopPath
       .getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -154,8 +154,7 @@ object LayoutQueries {
     * layout). Oracle is the plain range aggregate: layout must be
     * semantics-preserving. */
   def l10Zorder(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${tmpRoot(dir)}/orders_zorder"
-    writeOnce(s, path) {
+    val path = layoutCopy(dir, "orders_zorder") { path =>
       val b = Tables.orders(s, dir).agg(
         min(col("o_orderkey")).cast("long"),
         max(col("o_orderkey")).cast("long"),

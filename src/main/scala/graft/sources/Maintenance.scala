@@ -24,8 +24,9 @@ import org.apache.spark.sql.SparkSession
   *      PageRank), [[IndexStore.refreshBaseClusters]] (verified
   *      edges + min labels);
   *   3. bumps the dataset's [[IndexStore.indexVersion]] — which
-  *      invalidates the version-keyed ingest probe context (ADVICE
-  *      r19's staleness bug) — and eagerly rebuilds it, so the next
+  *      invalidates every memo of the dataset, the ingest probe
+  *      context among them (ADVICE r19's staleness bug) — and eagerly
+  *      rebuilds the probe context, so the next
   *      streaming micro-batch pays only batch-dependent joins.
   *
   * MaintenanceSpec pins that the refreshed views are row-identical

@@ -76,8 +76,8 @@ class LayoutSpec extends SparkSpec {
     assert(row.getLong(0) == expected.getLong(0))
     assert(row.getLong(1) == expected.getLong(1))
     // the manifest must actually prune: candidate files ⊂ all files
-    val tmpTag = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val layout = s"${System.getProperty("java.io.tmpdir")}/graft_layout_$tmpTag/orders_clustered"
+    val layout = graft.sources.LayoutQueries
+      .layoutPath(sfDir, "orders_clustered")
     val m = graft.sources.DataSkipping
       .buildManifest(spark, layout, "o_orderkey")
     val cand = graft.sources.DataSkipping.candidateFiles(m, 1000L, 5000L)
@@ -103,9 +103,8 @@ class LayoutSpec extends SparkSpec {
     assert(got("srcA") == ((450L, 3L)), s"srcA must split: $got")
     assert(got("srcB") == ((120L, 1L)), s"srcB must not: $got")
     // the fragmented precursor really was the small-files shape
-    val tag = tmp.replaceAll("[^A-Za-z0-9.]", "_")
-    val frag = new java.io.File(
-      s"${System.getProperty("java.io.tmpdir")}/graft_layout_$tag/documents_fragmented")
+    val frag = new java.io.File(graft.sources.LayoutQueries
+      .layoutPath(tmp, "documents_fragmented"))
     val nFrag = frag.listFiles().count(f =>
       f.isFile && f.getName.startsWith("part-"))
     assert(nFrag > 10, s"fragmented copy should be many files, got $nFrag")
@@ -125,10 +124,10 @@ class LayoutSpec extends SparkSpec {
     assert(row.getLong(0) == expected.getLong(0))
     assert(row.getLong(1) == expected.getLong(1))
     graft.sources.LayoutQueries.l5ManifestSkip(spark, sfDir).collect()
-    val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_layout_$tag"
+    def layout(name: String) =
+      graft.sources.LayoutQueries.layoutPath(sfDir, name)
     val zManifest = graft.sources.DataSkipping
-      .buildManifest(spark, s"$root/orders_zorder", "o_custkey")
+      .buildManifest(spark, layout("orders_zorder"), "o_custkey")
     val zCand = graft.sources.DataSkipping
       .candidateFiles(zManifest, 100L, 300L)
     val zTotal = zManifest.count()
@@ -136,7 +135,7 @@ class LayoutSpec extends SparkSpec {
       s"z-order should prune at least half the files for a ~13% " +
         s"custkey band: ${zCand.size}/$zTotal")
     val linManifest = graft.sources.DataSkipping
-      .buildManifest(spark, s"$root/orders_clustered", "o_custkey")
+      .buildManifest(spark, layout("orders_clustered"), "o_custkey")
     val linCand = graft.sources.DataSkipping
       .candidateFiles(linManifest, 100L, 300L)
     assert(linCand.size == linManifest.count(),
